@@ -21,6 +21,8 @@ import posixpath
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from olap_sus_spark import schemas
+from olap_sus_spark.catalog import read_table
 from olap_sus_spark.operators import facts as facts_ops
 from olap_sus_spark.operators.dims import ALL_GENERATED
 from olap_sus_spark.operators.transforms import (
@@ -64,7 +66,7 @@ def bootstrap_warehouse(
 
 
 def load_dims(spark: SparkSession, warehouse_dir: str) -> dict[str, DataFrame]:
-    return {t: spark.read.parquet(posixpath.join(warehouse_dir, t)) for t in DIM_TABLES}
+    return {t: read_table(spark, warehouse_dir, t) for t in DIM_TABLES}
 
 
 def run_ingest(
@@ -223,53 +225,50 @@ def refresh_aggregate(
         # cover the whole fact history (same guard as
         # refresh_daily_revenue's never-built fallback).
         dates = None
-    fact = spark.read.parquet(posixpath.join(warehouse_dir, fact_table))
+    fact = read_table(spark, warehouse_dir, fact_table)
     if dates is not None:
         fact = fact.filter(F.col("dt").isin(dates))  # partition-pruned scan
     partial = build(fact, load_dims(spark, warehouse_dir))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        partial.write.mode("overwrite").partitionBy("dt").parquet(
-            posixpath.join(warehouse_dir, name)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    partial.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "dt"
+    ).parquet(posixpath.join(warehouse_dir, name))
     return partial
 
 
 def read_aggregate(spark: SparkSession, warehouse_dir: str, name: str) -> DataFrame:
     """Serve a maintained aggregate: sum the per-dt partials."""
     _, _, keys, measure = AGGREGATES[name]
-    df = spark.read.parquet(posixpath.join(warehouse_dir, name))
+    df = read_table(spark, warehouse_dir, name)
     return df.groupBy(*keys).agg(F.sum(measure).alias(measure))
+
+
+_EMPTY_FACTS = {
+    "fact_nascimentos": schemas.FACT_NASCIMENTOS,
+    "fact_obitos": schemas.FACT_OBITOS,
+    "fact_internacoes": schemas.FACT_INTERNACOES,
+}
+
+
+def _read_or_empty(spark: SparkSession, warehouse_dir: str, t: str) -> DataFrame:
+    """Read warehouse table ``t``; a fact with no ingested partition yet
+    (e.g. fact_internacoes before any 'sih' drop) is an empty frame with
+    the declared schema plus the on-disk ``dt`` partition column."""
+    path = posixpath.join(warehouse_dir, t)
+    if t not in _EMPTY_FACTS or sinks._exists(spark, path):
+        return read_table(spark, path)
+    return spark.createDataFrame([], _EMPTY_FACTS[t]).withColumn(
+        "dt", F.lit(None).cast("string")
+    )
 
 
 def register_warehouse_views(spark: SparkSession, warehouse_dir: str) -> None:
     """Register every warehouse table as a temp view for spark.sql OLAP.
 
-    A fact with no ingested partition yet (e.g. fact_internacoes before any
-    'sih' drop) is registered as an empty frame with the declared schema, so
+    Facts not yet ingested are registered empty (:func:`_read_or_empty`), so
     queries against a fresh warehouse parse and return zero rows instead of
     failing on a missing path."""
-    from olap_sus_spark import schemas
-    from olap_sus_spark.sources.sinks import _exists
-
-    empty_schemas = {
-        "fact_nascimentos": schemas.FACT_NASCIMENTOS,
-        "fact_obitos": schemas.FACT_OBITOS,
-        "fact_internacoes": schemas.FACT_INTERNACOES,
-    }
     for t in (*DIM_TABLES, *FACT_TABLES, BRIDGE_TABLE):
-        path = posixpath.join(warehouse_dir, t)
-        if _exists(spark, path):
-            spark.read.parquet(path).createOrReplaceTempView(t)
-        elif t in empty_schemas:
-            # On-disk facts carry the dt= partition column; mirror it.
-            empty = spark.createDataFrame([], empty_schemas[t]).withColumn(
-                "dt", F.lit(None).cast("string")
-            )
-            empty.createOrReplaceTempView(t)
+        _read_or_empty(spark, warehouse_dir, t).createOrReplaceTempView(t)
 
 
 def register_reference_views(spark: SparkSession, warehouse_dir: str) -> None:
@@ -280,21 +279,9 @@ def register_reference_views(spark: SparkSession, warehouse_dir: str) -> None:
     case-insensitive).  Columns already share names except where the
     reference diverges: dimCausa exposes ``descricao_subcategoria`` /
     ``codigo_cid`` aliases, dimHorario exposes ``tempo``."""
-    from olap_sus_spark import schemas
-    from olap_sus_spark.sources.sinks import _exists
 
-    def _load(t: str):
-        path = posixpath.join(warehouse_dir, t)
-        if _exists(spark, path):
-            return spark.read.parquet(path)
-        empty = {
-            "fact_nascimentos": schemas.FACT_NASCIMENTOS,
-            "fact_obitos": schemas.FACT_OBITOS,
-            "fact_internacoes": schemas.FACT_INTERNACOES,
-        }[t]
-        return spark.createDataFrame([], empty).withColumn("dt", F.lit(None).cast("string"))
-
-    from pyspark.sql import functions as F
+    def _load(t: str) -> DataFrame:
+        return _read_or_empty(spark, warehouse_dir, t)
 
     alias_map = {
         "factnascimentos": _load("fact_nascimentos"),

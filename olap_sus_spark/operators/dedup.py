@@ -68,7 +68,8 @@ def keep_ge(df: DataFrame, score_col: str, threshold: float) -> DataFrame:
     ``score_col`` must be the LAST column (all call sites emit it last);
     the generator output re-appends it there, preserving the schema.
     """
-    assert df.columns[-1] == score_col
+    if df.columns[-1] != score_col:
+        raise ValueError(f"keep_ge: score column {score_col!r} must be last, got {df.columns}")
     others = [c for c in df.columns if c != score_col]
     return df.select(
         *others,

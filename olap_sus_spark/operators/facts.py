@@ -235,14 +235,6 @@ def causes_array() -> F.Column:
     )
 
 
-def explode_causes(deaths: DataFrame) -> DataFrame:
-    """Exploded (row_id, ordem_causa, codigo) view of :func:`causes_array`."""
-    return (
-        deaths.select("row_id", F.explode(causes_array()).alias("c"))
-        .select("row_id", "c.ordem_causa", "c.codigo")
-    )
-
-
 def build_fact_obitos(
     deaths: DataFrame, dims: dict[str, DataFrame]
 ) -> tuple[DataFrame, DataFrame]:
@@ -272,16 +264,21 @@ def build_fact_obitos(
     # one-call server-side literals (operators/onecall.py): F.lit(list)
     # expands client-side to one py4j round trip per element — 2×|dimCausa|
     # calls per fact build.  lit_ints_auto preserves the old element-type
-    # inference (INT while every key fits int32).
+    # inference (INT while every key fits int32).  A dimCausa holding only
+    # the sentinel keys every cause to 0 (an empty literal array has no
+    # element type).
     causa_map = F.map_from_arrays(
         lit_strings([r.codigo_cid10 for r in causa_rows]),
         lit_ints_auto([r.chave_causa for r in causa_rows]),
-    )
+    ) if causa_rows else None
     keyed = F.transform(
         causes_array(),
         lambda s: F.struct(
             s["ordem_causa"].alias("ordem_causa"),
-            F.coalesce(F.try_element_at(causa_map, s["codigo"]), F.lit(0)).alias("chave_causa"),
+            (
+                F.coalesce(F.try_element_at(causa_map, s["codigo"]), F.lit(0))
+                if causa_rows else F.lit(0)
+            ).alias("chave_causa"),
         ),
     )
     # In-row twin of bridge.canonical_signature: 'chave:ordem' fragments

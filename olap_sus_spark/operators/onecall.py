@@ -16,8 +16,14 @@ makes exactly ONE py4j call (``F.expr``).  Value fidelity:
   parsed constant is bit-identical to the Python float (verified by an
   int64-bit-view compare over random magnitudes, ±0.0 and denormals in
   tests/test_r11_optimizations.py).
+  NaN and ±Infinity, which have no numeric literal, are rendered as
+  ``CAST('NaN' AS DOUBLE)`` / ``CAST('Infinity' AS DOUBLE)`` /
+  ``CAST('-Infinity' AS DOUBLE)``.
 - ints are rendered as ``L`` (BIGINT) or bare (INT) literals — exact.
-- strings are single-quoted with backslash/quote escaping.
+- strings are single-quoted with backslash/quote escaping.  This assumes
+  the session's ``spark.sql.parser.escapedStringLiterals`` is ``false``
+  (Spark's default, and the engine session's): with it ``true`` a
+  backslash is kept verbatim and ``\\'`` no longer escapes a quote.
 
 The resulting unresolved expression tree (``array(...)`` /
 ``named_struct(...)`` calls over foldable literals) is what the client-side
@@ -27,6 +33,7 @@ unchanged — only construction cost moves.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterable, Sequence
 
 from pyspark.sql import Column
@@ -34,13 +41,14 @@ from pyspark.sql import functions as F
 
 _INT32_MAX = 2**31 - 1
 _INT64_MAX = 2**63 - 1
+_NON_FINITE = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
 
 
 def sql_double(x: float) -> str:
     x = float(x)
-    if x != x or x in (float("inf"), float("-inf")):
-        raise ValueError(f"non-finite double literal: {x!r}")
-    return repr(x) + "D"
+    if math.isfinite(x):
+        return repr(x) + "D"
+    return f"CAST('{_NON_FINITE[repr(x)]}' AS DOUBLE)"
 
 
 def sql_bigint(n: int) -> str:

@@ -21,17 +21,18 @@ import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 
+from olap_sus_spark.catalog import read_table
+
 
 def write_fact_partition(df: DataFrame, warehouse_dir: str, table: str, dt: str) -> str:
     """Overwrite the single ``dt=<date>`` partition of a fact table."""
     from pyspark.sql import functions as F
 
-    spark = df.sparkSession
     path = posixpath.join(warehouse_dir, table)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         df.withColumn("dt", F.lit(dt))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("dt")
         .parquet(path)
     )
@@ -48,7 +49,7 @@ def append_bridge(df: DataFrame, warehouse_dir: str, table: str = "ponte_grupo_c
     spark = df.sparkSession
     path = posixpath.join(warehouse_dir, table)
     if _exists(spark, path):
-        existing = spark.read.parquet(path).select("chave_grupo_causa").distinct()
+        existing = read_table(spark, path).select("chave_grupo_causa").distinct()
         df = df.join(existing, "chave_grupo_causa", "left_anti")
     df.write.mode("append").parquet(path)
     return path
@@ -302,23 +303,16 @@ def write_sorted_partitioned(
     within each partition files stay range-sorted on ``sort_cols`` so
     footer min/max stats keep pruning selective probes.  ``dynamic=True``
     scopes an overwrite to the partitions present in ``df`` (saving and
-    restoring the session conf)."""
-    spark = df.sparkSession
+    leaving the session conf untouched)."""
     out = (
         df.repartitionByRange(files, part_col, *sort_cols)
         .sortWithinPartitions(part_col, *sort_cols)
         .write.mode("overwrite")
         .partitionBy(part_col)
     )
-    if not dynamic:
-        out.parquet(path)
-        return path
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    if dynamic:
+        out = out.option("partitionOverwriteMode", "dynamic")
+    out.parquet(path)
     return path
 
 
@@ -347,14 +341,3 @@ def _swap_in(spark: SparkSession, path: str, staging: str) -> None:
         fs.rename(jvm.org.apache.hadoop.fs.Path(path), retired)
         fs.rename(jvm.org.apache.hadoop.fs.Path(staging), jvm.org.apache.hadoop.fs.Path(path))
         fs.delete(retired, True)
-
-
-def _rm(spark: SparkSession, path: str) -> None:
-    if "://" not in path:
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-    else:  # pragma: no cover
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jvm_path, True)

@@ -5,8 +5,10 @@ fidelity incl. double bit-exactness and the element-type inference the
 old client-side F.lit(list) expansion had), the keep_ge generator filter
 (selection-identical to .filter(score >= t), single evaluation of the
 score expression in the plan), the NaN-exactness of the threshold-above-
-aggregate commutation (refuting ADVICE r10's pre-drop suggestion), and
-the explode-both-orientations rewrite of the union-duplicated subtrees.
+aggregate commutation (refuting ADVICE r10's pre-drop suggestion), the
+explode-both-orientations rewrite of the union-duplicated subtrees, and
+their edge cases (non-finite doubles, quote plus backslash strings, a
+sentinel-only cause dimension, keep_ge's column check).
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ import math
 import re
 import struct as _st
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -64,7 +67,7 @@ def test_onecall_int_and_string_fidelity(spark):
 
     big = [0, 1, -1, 2**62, -(2**62), 2**31, 2**31 - 1]
     small = [0, 5, -7, 2**31 - 1, -(2**31)]
-    strs = ["plain", "o'brien", "back\\slash", "tab\tchar", ""]
+    strs = ["plain", "o'brien", "back\\slash", "tab\tchar", "", "it\\'s \\\\ '\\"]
     df = spark.range(1).select(
         lit_bigints(big).alias("b"),
         lit_ints_auto(small).alias("i"),
@@ -82,6 +85,37 @@ def test_onecall_int_and_string_fidelity(spark):
     assert types["i"] == "array<int>"
     assert types["w"] == "array<bigint>"
     assert types["b"] == "array<bigint>"
+
+
+def test_onecall_non_finite_doubles_bit_exact(spark):
+    from olap_sus_spark.operators.onecall import lit_doubles, sql_double
+
+    vals = [float("nan"), float("inf"), float("-inf")]
+    for v in vals:
+        got = spark.sql(f"SELECT {sql_double(v)} AS v").collect()[0]["v"]
+        assert _bits(got) == _bits(v), (v, got)
+    row = spark.range(1).select(lit_doubles([1.0, *vals]).alias("a")).collect()[0]
+    assert [_bits(a) for a in row["a"]] == [_bits(v) for v in [1.0, *vals]]
+
+
+def test_sentinel_only_cause_dim_keys_every_cause_to_zero(spark):
+    from olap_sus_spark.operators.dims import ALL_GENERATED
+    from olap_sus_spark.operators.facts import build_fact_obitos
+    from olap_sus_spark.operators.transforms import transform_sim
+    from olap_sus_spark.sources import seeds
+    from olap_sus_spark.sources.raw_csv import read_dataset
+    from tests.test_etl_e2e import DT, LANDING, SEEDS
+
+    dims = {name: fn(spark) for name, fn in ALL_GENERATED.items()}
+    dims["dim_municipio"] = seeds.load_dim_municipio(spark, SEEDS["municipio"])
+    dims["dim_ocupacao"] = seeds.load_dim_ocupacao(spark, SEEDS["ocupacao"])
+    dims["dim_causa"] = seeds.load_dim_causa(spark, SEEDS["causa"]).filter(
+        F.col("chave_causa") == 0
+    )
+    fact, bridge = build_fact_obitos(transform_sim(read_dataset(spark, LANDING, "sim", DT)), dims)
+    assert fact.count() > 0
+    keys = {r.chave_causa for r in bridge.collect()}
+    assert keys == {0}
 
 
 def test_onecall_inline_rows_matches_scalar_lit_inline(spark):
@@ -147,6 +181,14 @@ def test_keep_ge_equals_filter_incl_nan_and_boundary(spark):
     want = {key(r) for r in df.filter(F.col("score") >= 0.3).collect()}
     assert got == want
     assert {r[0] for r in got} == {1, 3, 7, 11}
+
+
+def test_keep_ge_rejects_score_column_not_last(spark):
+    from olap_sus_spark.operators.dedup import keep_ge
+
+    df = spark.createDataFrame([(0.5, 1)], "score double, id bigint")
+    with pytest.raises(ValueError, match="must be last"):
+        keep_ge(df, "score", 0.3)
 
 
 def test_keep_ge_single_fold_in_plan(spark):
